@@ -43,6 +43,7 @@ EVENT_SCHEMA = T.StructType([
 
 LATE_DATA_HORIZON = "7 days"    # W3: BaseEventConsumer.java:150-159
 IDEMPOTENCY_HORIZON = "1 hour"  # W4: 3600 s Redis TTL, :43-47
+CLOCK_COL = "_consume_now"      # consume_to_tables' per-batch clock
 
 
 def read_event_stream(spark: SparkSession, source_dir: str,
@@ -156,29 +157,39 @@ def consume_to_tables(stream: DataFrame, main_dir: str, dlq_dir: str,
     batch overwrites its own previous (possibly partial) attempt instead
     of appending duplicates — idempotent-by-batch_id, the standard
     foreachBatch exactly-once recipe.
+
+    Validation clock: the 7-day age check reads one clock per
+    micro-batch. It is a column added to the stream before
+    foreachBatch: `now_fn()` if given, else `current_timestamp()`,
+    which Spark evaluates as the micro-batch's timestamp and records in
+    the checkpoint's offset log. Both branches validate against that
+    one value, so no row crosses the horizon between the main and the
+    DLQ write and lands in both; a replayed batch reuses its recorded
+    timestamp and rewrites the same rows. The column is dropped before
+    `process` and both writes; output schemas do not carry it.
     """
     def handle_batch(batch: DataFrame, batch_id: int) -> None:
-        now = (now_fn() if now_fn is not None else F.current_timestamp())
         valid, invalid = batch_pipeline.split_valid_invalid(
             batch.withColumn("event_key", F.col("event_id").cast("string"))
                  .withColumn("topic", F.concat(F.lit("nnipa.events."),
                                                F.col("event_type"))),
-            "event_key", "ts", now)
+            "event_key", "ts", F.col(CLOCK_COL))
         # deterministic first-wins (bare dropDuplicates keeps a
         # scheduling-dependent survivor, so a replayed batch could
         # rewrite its directory with different rows — breaking the
         # idempotent-by-batch_id property this sink advertises)
-        out = batch_pipeline.dedup_earliest(valid, ["event_id"],
-                                            ["ts", "event_id"])
+        out = batch_pipeline.dedup_earliest(valid.drop(CLOCK_COL),
+                                            ["event_id"], ["ts", "event_id"])
         if process is not None:
             out = process(out)
         (out.write.mode("overwrite")
             .parquet(f"{main_dir}/batch_id={batch_id}"))
-        dlq = batch_pipeline.to_dlq(invalid)
+        dlq = batch_pipeline.to_dlq(invalid.drop(CLOCK_COL))
         (dlq.write.mode("overwrite")
             .parquet(f"{dlq_dir}/batch_id={batch_id}"))
 
-    return (stream.writeStream
+    now = now_fn() if now_fn is not None else F.current_timestamp()
+    return (stream.withColumn(CLOCK_COL, now).writeStream
             .foreachBatch(handle_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)

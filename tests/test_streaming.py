@@ -4,8 +4,10 @@ exactly-once replays."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -93,6 +95,55 @@ def test_consume_exactly_once_on_restart(spark, sf_smoke, tmpdir):
     n_events = tables.load_table(spark, sf_smoke, "events").count()
     assert (spark.read.parquet(main).count()
             + spark.read.parquet(dlq).count()) == n_events
+
+
+def test_consume_replay_keeps_its_batch_clock(spark, tmpdir):
+    """One validation clock per micro-batch, recorded in the checkpoint.
+
+    The source's timestamps cross the 7-day horizon every 20 ms over
+    the two minutes after it is written, so a clock that moved
+    between the main and the DLQ write would put some event_id in both
+    tables, and a replay with a new clock would rewrite its batch with
+    different rows."""
+    src = f"{tmpdir}/edge"
+    main, dlq, ckpt = f"{tmpdir}/main", f"{tmpdir}/dlq", f"{tmpdir}/ckpt"
+    horizon_us = int((time.time() - 7 * 86_400 - 5) * 1e6)
+    (spark.range(6_000)
+     .select(F.col("id").alias("event_id"),
+             F.timestamp_micros(F.lit(horizon_us) + F.col("id") * 20_000)
+              .alias("ts"),
+             F.lit(1).cast("long").alias("user_id"),
+             F.lit("view").alias("event_type"), F.lit(1.0).alias("value"),
+             F.lit("{}").alias("props"))
+     .repartition(2).write.mode("overwrite").parquet(src))
+
+    def drain():
+        q = sp.consume_to_tables(sp.read_event_stream(spark, src),
+                                 main, dlq, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return q
+
+    def written():
+        return ({(r.batch_id, r.event_id) for r in
+                 spark.read.parquet(main).select("batch_id", "event_id")
+                 .collect()},
+                {(r.batch_id, r.event_id, r.reject_reason) for r in
+                 spark.read.parquet(dlq)
+                 .select("batch_id", "event_id", "reject_reason").collect()})
+
+    drain()
+    first_main, first_dlq = written()
+    assert first_main and first_dlq
+    assert not ({e for _, e in first_main} & {e for _, e, _ in first_dlq})
+
+    # forget that the last batch committed: the restart replays it
+    last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    replay = drain()
+    assert any(p.numInputRows > 0 for p in replay.recentProgress)
+    assert written() == (first_main, first_dlq)
 
 
 def test_retrying_sink_exhausts_to_dlq(spark, tmpdir):
